@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Measurement tool (round 17 — optimization guide §1): runs one query
@@ -12,14 +11,7 @@ import scala.collection.mutable
   */
 object Diag {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(graft.functions.GraftFunctions.register)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = OneQ.session()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     case class Job(id: Int, var t0: Long = 0L, var t1: Long = 0L,
@@ -30,9 +22,10 @@ object Diag {
     @volatile var record = false
     // the listener bus delivers on its own thread while main reads the
     // maps right after `record = false` (ADVICE r17): serialize every
-    // access on `jobs` — and drop never-ended jobs (t1 == 0) from the
-    // sums below, so a late JobEnd can neither corrupt the maps nor
-    // contribute a large negative wall
+    // access to `jobs` and `stages`, reads included, on `jobs` — and
+    // drop never-ended jobs (t1 == 0) from the sums below, so a late
+    // JobEnd can neither corrupt the maps nor contribute a large
+    // negative wall
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = if (record) {
         jobs.synchronized { jobs(e.jobId) = Job(e.jobId, t0 = e.time) }
@@ -56,17 +49,12 @@ object Diag {
         }
     }
     spark.sparkContext.addSparkListener(listener)
-    def sweep(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
     for (q <- args) {
       for (_ <- 1 to 2) {
         SparkEntry.queries(q)(spark, dir).write.mode("overwrite").format("noop").save()
-        sweep()
+        OneQ.sweep(spark)
       }
-      jobs.clear(); stages.clear()
+      jobs.synchronized { jobs.clear(); stages.clear() }
       record = true
       val t0 = System.nanoTime()
       SparkEntry.queries(q)(spark, dir).write.mode("overwrite").format("noop").save()
@@ -77,17 +65,19 @@ object Diag {
       // drain API is private[spark]; a bounded sleep is the tool's
       // accuracy budget, not a correctness device)
       Thread.sleep(300)
-      sweep()
+      OneQ.sweep(spark)
       println(f"===== $q total ${wall}%.3f s =====")
       // never-ended jobs (t1 == 0 — a JobEnd lost to the record flag)
       // are dropped rather than summed as negative walls
-      val js = jobs.synchronized { jobs.values.filter(_.t1 > 0).toSeq }
+      val (js, stgs) = jobs.synchronized {
+        (jobs.values.filter(_.t1 > 0).toSeq, stages.toSeq)
+      }
       println(f"jobs: ${js.size}, job wall sum ${js.map(j => j.t1 - j.t0).sum / 1e3}%.3f s, " +
-        f"stages: ${stages.size}, tasks: ${stages.map(_.tasks).sum}")
+        f"stages: ${stgs.size}, tasks: ${stgs.map(_.tasks).sum}")
       for (j <- js.sortBy(j => -(j.t1 - j.t0)).take(15))
         println(f"  job ${j.id}%3d  ${(j.t1 - j.t0) / 1e3}%7.3f s")
       println("slowest stages:")
-      for (st <- stages.sortBy(-_.wallMs).take(20))
+      for (st <- stgs.sortBy(-_.wallMs).take(20))
         println(f"  ${st.wallMs / 1e3}%7.3f s  ${st.tasks}%4d tasks  ${st.name}  @ ${st.details}")
     }
     spark.stop()

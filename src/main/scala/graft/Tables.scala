@@ -80,10 +80,13 @@ object Num {
     floor(c * p + lit(0.5)).cast("double") / p
   }
 
-  /** Oracle-SQL fragment mirroring [[roundD]]. */
+  /** Oracle-SQL fragment mirroring [[roundD]]. Parenthesized whole, like
+    * the Column it mirrors: spliced into `x * <fragment>`, a bare
+    * `FLOOR(...) / 1e6` would parse as `(x * FLOOR(...)) / 1e6`.
+    */
   def sqlRoundD(expr: String, dp: Int = 4): String = {
     val p = s"1e$dp"
-    s"FLOOR(($expr) * $p + 0.5) / $p"
+    s"(FLOOR(($expr) * $p + 0.5) / $p)"
   }
 
   /** Portable standard-normal CDF Φ(x), via the Abramowitz–Stegun 7.1.26

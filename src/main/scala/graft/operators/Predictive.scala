@@ -342,98 +342,103 @@ object Predictive {
 
   /** q38: what-if scenario simulator (reference: what_if.py:24-60 Scenario
     * → SimulationResult; 140-220 simulate()). A literal scenario grid
-    * (score × activity state) is joined against three model tables built
-    * from history — the next-day regression fit, per-quality-bucket
-    * outcome stats (confidence), and per-state outcome deltas — to produce
+    * (score × activity state) is scored against the model built from
+    * history — the next-day regression fit, per-quality-bucket outcome
+    * stats (confidence), and per-state outcome deltas — to produce
     * predicted outcome, confidence range, baseline comparison, and a
     * recommendation, exactly the reference's simulate() steps 1-8 as one
-    * declarative plan. Model tables are tiny aggregates → broadcast joins;
-    * nothing fact-sized is shuffled per scenario.
+    * declarative plan.
     */
-  def q38WhatIf(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val pairs = nextDayPairs(rollup(s, dir)).persist()
-    // eager materialization: the final plan consumes `pairs` through FOUR
-    // broadcast subtrees (reg/overall/buckets/states), and broadcast
-    // exchanges build concurrently on driver threads — racing a cold
-    // cache, each would recompute the whole rollup pipeline
-    pairs.count()
+  def q38WhatIf(s: SparkSession, dir: String): DataFrame =
+    whatIfTable(nextDayPairs(rollup(s, dir)))
 
-    // step-1 model: closed-form OLS of next-day outcome on prev score
-    val dec = org.apache.spark.sql.types.DataTypes.createDecimalType(25, 6)
-    val reg = pairs.agg(
-        count(lit(1)).cast("double").as("n"),
-        Num.exactSum(col("prev_score")).cast("double").as("sx"),
-        Num.exactSum(col("next_purchase_total")).cast("double").as("sy"),
-        sum((col("prev_score") * col("next_purchase_total")).cast(dec))
-          .cast("double").as("sxy"),
-        sum((col("prev_score") * col("prev_score")).cast(dec))
-          .cast("double").as("sxx"))
-      .select(
-        col("n").cast("long").as("n_history"),
-        Num.roundD((col("n") * col("sxy") - col("sx") * col("sy")) /
-          (col("n") * col("sxx") - col("sx") * col("sx"))).as("slope"),
-        Num.roundD((col("sy") - (col("n") * col("sxy") - col("sx") * col("sy")) /
-          (col("n") * col("sxx") - col("sx") * col("sx")) * col("sx")) / col("n"))
-          .as("intercept"))
+  private val whatIfBuckets = Seq("excellent", "good", "fair", "poor")
+  private val whatIfStates = Seq("power", "buyer", "active", "passive")
 
+  /** The what-if table over a pairs frame ([[nextDayPairs]]'s columns).
+    *
+    * `pairs` is consumed once: every model table of the reference — the
+    * OLS sums, the baseline, the per-quality-bucket spread and the
+    * per-state means — is a column of ONE single-row aggregate, with the
+    * bucket and state tables unrolled into conditional aggregates over
+    * their fixed key sets. The 16-row scenario grid is generated from
+    * that row and each scenario picks its bucket and state columns with
+    * a CASE, so the plan has no join, no cache and no eager barrier, and
+    * its single output partition is sorted without a range exchange. An
+    * absent bucket reads `bucket_n = 0` and a null `bucket_std` (the
+    * baseline spread stands in); an absent state reads `state_delta = 0`.
+    * Every sum is the DECIMAL(25,6) exact sum the oracle replays.
+    */
+  def whatIfTable(pairs: DataFrame): DataFrame = {
+    val (x, y) = (col("prev_score"), col("next_purchase_total"))
+    def exact(c: Column) = Num.exactSum(c).cast("double")
+    def inBucket(b: String) = col("prev_quality") === b
+    val sums = pairs.agg(
+      count(lit(1)).cast("double").as("n"),
+      (Seq(exact(x).as("sx"), exact(y).as("sy"), exact(x * y).as("sxy"),
+        exact(x * x).as("sxx"), exact(y * y).as("syy")) ++
+      whatIfBuckets.flatMap(b => Seq(
+        count(when(inBucket(b), 1)).as(s"bn_$b"),
+        exact(when(inBucket(b), y)).as(s"bsx_$b"),
+        exact(when(inBucket(b), y * y)).as(s"bsxx_$b"))) ++
+      whatIfStates.map(st =>
+        Num.avgD(when(col("prev_state") === st, y)).as(s"sm_$st"))): _*)
+
+    // step-1 model: closed-form OLS of next-day outcome on prev score;
     // baseline + overall spread (what_if.py _build_baseline)
-    val overall = pairs.agg(
-        count(lit(1)).cast("double").as("n"),
-        Num.exactSum(col("next_purchase_total")).cast("double").as("sx"),
-        sum((col("next_purchase_total") * col("next_purchase_total")).cast(dec))
-          .cast("double").as("sxx"))
-      .select(
-        Num.roundD(col("sx") / col("n")).as("baseline_mean"),
-        Num.roundD(sqrt((col("sxx") - col("sx") * col("sx") / col("n")) /
-          (col("n") - 1.0))).as("baseline_std"))
+    val (n, sx, sy, sxy, sxx, syy) =
+      (col("n"), col("sx"), col("sy"), col("sxy"), col("sxx"), col("syy"))
+    val baselineMean = Num.roundD(sy / n)
+    val model = sums.select(
+      (Seq(
+        n.cast("long").as("n_history"),
+        Num.roundD((n * sxy - sx * sy) / (n * sxx - sx * sx)).as("slope"),
+        Num.roundD((sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx) / n)
+          .as("intercept"),
+        baselineMean.as("baseline_mean"),
+        Num.roundD(sqrt((syy - sy * sy / n) / (n - 1.0))).as("baseline_std")) ++
+      // per-quality-bucket confidence stats (what_if.py _build_sleep_buckets)
+      whatIfBuckets.flatMap { b =>
+        val (bn, bsx, bsxx) = (col(s"bn_$b"), col(s"bsx_$b"), col(s"bsxx_$b"))
+        Seq(bn.as(s"bn_$b"),
+          when(bn > 1, Num.roundD(sqrt((bsxx - bsx * bsx / bn) / (bn - lit(1.0)))))
+            .as(s"bstd_$b"))
+      } ++
+      // per-state outcome deltas (what_if.py _build_workout_effects)
+      whatIfStates.map(st => coalesce(Num.roundD(col(s"sm_$st") - baselineMean, 2),
+        lit(0.0)).as(s"delta_$st"))): _*)
 
-    // per-quality-bucket confidence stats (what_if.py _build_sleep_buckets)
-    val buckets = pairs.groupBy(col("prev_quality").as("bucket"))
-      .agg(
-        count(lit(1)).as("bucket_n"),
-        Num.exactSum(col("next_purchase_total")).cast("double").as("bsx"),
-        sum((col("next_purchase_total") * col("next_purchase_total")).cast(dec))
-          .cast("double").as("bsxx"))
-      .select(col("bucket"), col("bucket_n"),
-        when(col("bucket_n") > 1,
-          Num.roundD(sqrt((col("bsxx") - col("bsx") * col("bsx") / col("bucket_n")) /
-            (col("bucket_n") - lit(1.0))))).as("bucket_std"))
+    val scenarios = for {
+      sc <- Seq(45.0, 65.0, 80.0, 92.0); st <- whatIfStates
+    } yield struct(lit(sc).as("scenario_score"), lit(st).as("scenario_state"))
+    // CASE over a closed key set: the last key is the ELSE branch
+    def pick(key: Column, keys: Seq[String], prefix: String): Column =
+      keys.init.tail.foldLeft(when(key === keys.head, col(prefix + keys.head))) {
+        (c, k) => c.when(key === k, col(prefix + k))
+      }.otherwise(col(prefix + keys.last))
+    val scored = model
+      .select(col("*"), inline(array(scenarios: _*)))
+      .withColumn("bucket", qualityBucket(col("scenario_score")))
+      .withColumn("bucket_n", pick(col("bucket"), whatIfBuckets, "bn_"))
+      .withColumn("bucket_std", pick(col("bucket"), whatIfBuckets, "bstd_"))
+      .withColumn("state_delta", pick(col("scenario_state"), whatIfStates, "delta_"))
 
-    // per-state outcome deltas (what_if.py _build_workout_effects)
-    val states = pairs.groupBy(col("prev_state").as("state"))
-      .agg(Num.avgD(col("next_purchase_total")).as("state_mean"))
-
-    val grid = Seq(45.0, 65.0, 80.0, 92.0)
-      .flatMap(sc => Seq("power", "buyer", "active", "passive").map(st => (sc, st)))
-      .toDF("scenario_score", "scenario_state")
-
-    val predictedRaw = col("slope") * col("scenario_score") + col("intercept") +
-      coalesce(col("state_delta"), lit(0.0))
-    val predicted = greatest(lit(0.0), predictedRaw)
+    val predicted = greatest(lit(0.0),
+      col("slope") * col("scenario_score") + col("intercept") + col("state_delta"))
     val sd = coalesce(col("bucket_std"), col("baseline_std"))
-    grid
-      .crossJoin(broadcast(reg))
-      .crossJoin(broadcast(overall))
-      .join(broadcast(buckets),
-        qualityBucket(col("scenario_score")) === col("bucket"), "left")
-      .join(broadcast(states
-          .crossJoin(overall.select(col("baseline_mean").as("bm")))
-          .select(col("state"),
-            Num.roundD(col("state_mean") - col("bm"), 2).as("state_delta"))),
-        col("scenario_state") === col("state"), "left")
+    scored
       .select(
         col("scenario_score"), col("scenario_state"), col("n_history"),
         Num.roundD(predicted, 2).as("predicted_outcome"),
         Num.roundD(greatest(lit(0.0), predicted - sd), 2).as("conf_lo"),
         Num.roundD(predicted + sd, 2).as("conf_hi"),
-        coalesce(col("state_delta"), lit(0.0)).as("state_delta"),
+        col("state_delta"),
         Num.roundD(predicted - col("baseline_mean"), 2).as("vs_baseline"),
         when(predicted >= col("baseline_mean") * 1.2, "push")
           .when(predicted >= col("baseline_mean"), "steady")
           .when(predicted >= col("baseline_mean") * 0.8, "light")
           .otherwise("recover").as("recommendation"),
-        coalesce(col("bucket_n"), lit(0L)).as("bucket_n"))
+        col("bucket_n"))
       .orderBy("scenario_score", "scenario_state")
   }
 

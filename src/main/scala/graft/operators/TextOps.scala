@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{Num, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Text analysis for training-data curation: quality statistics,
@@ -143,20 +144,19 @@ object TextOps {
     * language" (the routing decision for better markers vs a model).
     *
     * Scale shape: q28's row-local scoring scan feeds ONE
-    * partial-aggregated (lang, predicted) groupBy; the cell frame is
-    * ≤ langs² rows and is persisted so the row/column rollups reuse it
-    * (the q132 discipline — one corpus scan total).
+    * partial-aggregated (lang, predicted) groupBy; the row and column
+    * totals are window sums over that ≤ langs² cell frame, so it has one
+    * consumer and the corpus is scanned once with no cache and no eager
+    * barrier. The cells are coalesced to one partition first, which
+    * both windows and the final sort accept without another exchange.
     */
-  def q135LangIdConfusion(s: SparkSession, dir: String): DataFrame = {
-    val cm = q28LangId(s, dir)
+  def q135LangIdConfusion(s: SparkSession, dir: String): DataFrame =
+    q28LangId(s, dir)
       .groupBy("lang", "predicted_lang").agg(count(lit(1)).as("n_docs"))
-      .persist()
-    cm.count() // materialize: both rollups below reuse it
-    val rowTot = cm.groupBy("lang").agg(sum("n_docs").as("lang_docs"))
-    val colTot = cm.groupBy("predicted_lang")
-      .agg(sum("n_docs").as("pred_docs"))
-    cm.join(broadcast(rowTot), "lang")
-      .join(broadcast(colTot), "predicted_lang")
+      .coalesce(1)
+      .withColumn("lang_docs", sum("n_docs").over(Window.partitionBy("lang")))
+      .withColumn("pred_docs",
+        sum("n_docs").over(Window.partitionBy("predicted_lang")))
       .select(col("lang"), col("predicted_lang"), col("n_docs"),
         col("lang_docs"), col("pred_docs"),
         Num.roundD(col("n_docs").cast("double") / col("lang_docs"), 6)
@@ -165,7 +165,6 @@ object TextOps {
           .as("share_of_pred_r"),
         (col("lang") === col("predicted_lang")).cast("int").as("is_diag"))
       .orderBy("lang", "predicted_lang")
-  }
 
   val q135Sql: String = {
     val scoreCols = markers.map { case (lang, ws) =>
@@ -630,7 +629,6 @@ object TextOps {
     */
   def tagTopics(s: SparkSession, d: DataFrame,
       taxonomy: Seq[(String, String)] = DefaultTaxonomy): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import s.implicits._
     val tax = taxonomy.toDF("topic", "term")
     val base = d.select(col("doc_id"), col("lang"),

@@ -1632,43 +1632,36 @@ object TextRank {
         .select(col("q_id"), col("qemb"), col("qn"), col("cell"))
     }
     val denseIvf0 = denseRank(broadcast(probes).join(corpusCells, Seq("cell")))
-    // materialize the four arm tables concurrently: each localCheckpoint
-    // is one Spark job; submitted from a pool they back-fill each other's
-    // idle cores (guide §2.6), so this barrier costs max(arm), not Σ(arm)
-    val arms0 = Seq(sparseExact0, sparsePruned0, denseExact0, denseIvf0)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(arms0.size)
-    val pinned =
-      try arms0.map { a =>
-        pool.submit(new java.util.concurrent.Callable[DataFrame] {
-          override def call(): DataFrame = a.localCheckpoint(true)
-        })
-      }.map(_.get())
-      finally pool.shutdown()
+    // materialize the four arm tables concurrently (guide §2.6): the
+    // barrier costs max(arm), not Σ(arm), and a failed arm leaves no pin
+    val pinned = graft.Frames.pinConcurrently(
+      Seq(sparseExact0, sparsePruned0, denseExact0, denseIvf0))
     val Seq(sparseExact, sparsePruned, denseExact, denseIvf) = pinned
-    val truth = fuseRrf(sparseExact, denseExact, k).select("q_id", "doc_id")
-      .localCheckpoint(true)
-    def op(st: String, dt: String, sp: DataFrame, de: DataFrame): DataFrame = {
-      val fused = fuseRrf(sp, de, k)
-        .select(col("q_id"), col("doc_id"), lit(1).as("hit"))
-      truth.join(fused, Seq("q_id", "doc_id"), "left")
-        .agg(count(lit(1)).as("n_truth"), count(col("hit")).as("n_found"))
-        .select(lit(st).as("sparse_tier"), lit(dt).as("dense_tier"),
-          col("n_truth"), col("n_found"),
-          Num.roundD(col("n_found").cast("double") /
-            col("n_truth").cast("double")).as("recall_r"))
-    }
     // the 4-row grid is checkpointed so the truth and arm pins can be
-    // FREED here (ADVICE r15 — the pagerank rule): the caller holds
-    // exactly one tiny checkpoint instead of five corpus-derived pins
-    val out = op("exact", "exact", sparseExact, denseExact)
-      .unionByName(op("exact", "ivf", sparseExact, denseIvf))
-      .unionByName(op("pruned", "exact", sparsePruned, denseExact))
-      .unionByName(op("pruned", "ivf", sparsePruned, denseIvf))
-      .orderBy("sparse_tier", "dense_tier")
-      .localCheckpoint(true)
-    graft.Frames.freePinned(truth)
-    pinned.foreach(graft.Frames.freePinned)
-    out
+    // FREED on the way out, failure included (ADVICE r15 — the pagerank
+    // rule): the caller holds exactly one tiny checkpoint instead of
+    // five corpus-derived pins
+    try {
+      val truth = fuseRrf(sparseExact, denseExact, k).select("q_id", "doc_id")
+        .localCheckpoint(true)
+      def op(st: String, dt: String, sp: DataFrame, de: DataFrame): DataFrame = {
+        val fused = fuseRrf(sp, de, k)
+          .select(col("q_id"), col("doc_id"), lit(1).as("hit"))
+        truth.join(fused, Seq("q_id", "doc_id"), "left")
+          .agg(count(lit(1)).as("n_truth"), count(col("hit")).as("n_found"))
+          .select(lit(st).as("sparse_tier"), lit(dt).as("dense_tier"),
+            col("n_truth"), col("n_found"),
+            Num.roundD(col("n_found").cast("double") /
+              col("n_truth").cast("double")).as("recall_r"))
+      }
+      try op("exact", "exact", sparseExact, denseExact)
+        .unionByName(op("exact", "ivf", sparseExact, denseIvf))
+        .unionByName(op("pruned", "exact", sparsePruned, denseExact))
+        .unionByName(op("pruned", "ivf", sparsePruned, denseIvf))
+        .orderBy("sparse_tier", "dense_tier")
+        .localCheckpoint(true)
+      finally graft.Frames.freePinned(truth)
+    } finally pinned.foreach(graft.Frames.freePinned)
   }
 
   val q150Sql: String = {

@@ -88,6 +88,22 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("q38 aggregates its pairs exactly once, with nothing cached") {
+    import org.apache.spark.sql.catalyst.expressions.Lead
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Window}
+    spark.sharedState.cacheManager.clearCache()
+    val plan = Predictive.q38WhatIf(spark, Sf).queryExecution.optimizedPlan
+    assert(!plan.toString.contains("InMemoryRelation"), plan.toString.take(500))
+    // `pairs` is the output of the per-user LEAD window: every model
+    // statistic must come from one aggregate over it, not one per table
+    def overPairs(p: LogicalPlan): Boolean = p.exists {
+      case w: Window => w.windowExpressions.exists(_.exists(_.isInstanceOf[Lead]))
+      case _ => false
+    }
+    val aggs = plan.collect { case a: Aggregate if overPairs(a.child) => a }
+    assert(aggs.size == 1, plan.toString.take(2000))
+  }
+
   test("q41 plans no global window over the fact table") {
     val p = planString(Predictive.q41TrendAnalyzer(spark, Sf))
     assert(p.contains("windowspecdefinition(user_id"), p.take(500))
@@ -453,21 +469,23 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("Join"), "epoch fan-out is an explode, not a join")
   }
 
-  test("q132/q135 rollup queries scan the corpus exactly once (persisted cell frame)") {
-    // the review fix pinned: all rollups must reuse the persisted
-    // (source, bin) / (lang, predicted) cell frame instead of
-    // re-running the corpus-sized scoring scan per branch. NOTE: the
-    // suite's planString clears the cache (needed by the lineage
-    // assertions above) — these three tests read the RAW plan because
-    // the in-query pin IS what they assert.
+  test("q132/q135 rollup queries scan the corpus exactly once") {
+    // q132's rollups must reuse the persisted (source, bin) cell frame
+    // instead of re-running the corpus-sized scoring scan per branch.
+    // NOTE: the suite's planString clears the cache (needed by the
+    // lineage assertions above) — this test reads the RAW plan because
+    // the in-query pin IS what it asserts.
     val p132 = Profile.q132SourcePsi(spark, Sf)
       .queryExecution.executedPlan.toString
     assert("InMemoryTableScan".r.findAllIn(p132).size >= 3,
       "q132 rollups must read the persisted cell frame")
+    // q135's row/column totals are windows over its one (lang, predicted)
+    // cell frame: one scan, no pin, and no exchange past the groupBy's
     val p135 = graft.operators.TextOps.q135LangIdConfusion(spark, Sf)
       .queryExecution.executedPlan.toString
-    assert("InMemoryTableScan".r.findAllIn(p135).size >= 3,
-      "q135 rollups must read the persisted cell frame")
+    assert("FileScan".r.findAllIn(p135).size == 1, p135)
+    assert(!p135.contains("InMemoryTableScan"), p135)
+    assert("Exchange".r.findAllIn(p135).size == 1, p135)
   }
 
   test("q133 retention: cohort sizes broadcast; the user join never goes cartesian") {
